@@ -97,7 +97,18 @@ object CleanFns {
     // coalesce-to-'' keeps it three-valued-logic-free: a null cell must
     // read as "no match", not poison the predicate to null (which would
     // silently drop the row in a filter).
-    cols.map(c => coalesce(lower(c.cast("string")), lit(""))
-        .contains(needle.toLowerCase))
-      .reduce(_ || _)
+    cols.map(colContains(_, needle)).reduce(_ || _)
+
+  /** P3 negated — true if NONE of `cols` contains `needle`: the
+    * negation-normal form of `!anyColContains`, an AND chain of
+    * per-column `NOT contains`. Build the negated predicate with this,
+    * not `!` over the OR chain: `BooleanSimplification` pushes that `NOT`
+    * down one OR level per optimizer pass, so at CRM width (297
+    * columns) each operator-optimization batch runs to its iteration cap.
+    */
+  def noColContains(cols: Seq[Column], needle: String): Column =
+    cols.map(c => !colContains(c, needle)).reduce(_ && _)
+
+  private def colContains(c: Column, needle: String): Column =
+    coalesce(lower(c.cast("string")), lit("")).contains(needle.toLowerCase)
 }

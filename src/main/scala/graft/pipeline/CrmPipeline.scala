@@ -61,16 +61,19 @@ object CrmPipeline {
     * ANY column contains "test" case-insensitively (substring — so
     * "latest" matches) AND the exemption predicate holds. Returns
     * (clean, removed) so the caller can audit-sink the removals (S10).
-    * One predicate, evaluated once per row — the reference's
+    * One predicate per side, evaluated once per row — the reference's
     * apply(axis=1) + full-frame anti-join collapses to a filter.
     */
   def splitTestRows(df: DataFrame, exempt: Column): (DataFrame, DataFrame) = {
     // coalesce the exemption to false: a NULL exemption cell would make
-    // isTest NULL, and a NULL predicate fails BOTH filters — the row
-    // would silently vanish from clean AND removed.
-    val isTest = anyColContains(df.columns.toSeq.map(qcol), "test") &&
-      !coalesce(exempt, lit(false))
-    (df.filter(!isTest), df.filter(isTest))
+    // both predicates NULL, and a NULL predicate fails BOTH filters —
+    // the row would silently vanish from clean AND removed.
+    val exempted = coalesce(exempt, lit(false))
+    val cols = df.columns.toSeq.map(qcol)
+    // The keep side is `!isTest` already in negation-normal form, so
+    // the optimizer has no NOT to push through a column-wide OR chain.
+    (df.filter(noColContains(cols, "test") || exempted),
+      df.filter(anyColContains(cols, "test") && !exempted))
   }
 
   /** F1+F2 — frame-wide fill + whitespace normalization
@@ -224,14 +227,40 @@ object CrmPipeline {
   def mergeCounters(audit: DataFrame): DataFrame =
     audit.groupBy("target", "from_col", "mode").agg(count(lit(1)).as("n"))
 
-  /** S9 — per-column distinct-value extraction for every Multiple
-    * Choice STM column (main.py:458-473). Returns the DataFrames; the
-    * caller sinks them. At scale each is a shuffle-light global
-    * distinct on one column (partial aggregation map-side).
+  /** S9 — the distinct populated values of every Multiple Choice STM
+    * column (main.py:458-473) as ONE (list, value) frame: a single scan
+    * explodes each row into one (column name, value) pair per list,
+    * and one partial+final aggregation dedups them all. The result is a
+    * single partition sorted by (list, value), so a per-list slice of
+    * it is already in sink order and needs no shuffle of its own.
+    * Persist it after its input: persisting it first would plan it
+    * against the uncached input.
     */
-  def multiChoiceLists(df: DataFrame, stm: Stm): Seq[(String, DataFrame)] =
-    stm.multiChoiceCols.filter(df.columns.contains).map { c =>
-      c -> df.select(qcol(c)).filter(isPopulated(qcol(c))).distinct()
+  def multiChoiceValues(df: DataFrame, stm: Stm): DataFrame = {
+    val cols = stm.multiChoiceCols.filter(df.columns.contains)
+    val pairs = cols.map(c =>
+      struct(lit(c).as("list"), qcol(c).cast("string").as("value")))
+    (if (pairs.isEmpty)
+      df.select(lit("").as("list"), lit("").as("value")).filter(lit(false))
+    else
+      df.select(explode(array(pairs: _*)).as("p"))
+        .select(col("p.list").as("list"), col("p.value").as("value")))
+      .filter(isPopulated(col("value")))
+      .distinct()
+      // the aggregation stays parallel; only its deduplicated pairs
+      // move to the one partition that is then sorted
+      .repartition(1)
+      .sortWithinPartitions("list", "value")
+  }
+
+  /** S9 — the per-column distinct lists, each a slice of
+    * `values` (the [[multiChoiceValues]] frame) named after its column.
+    * Returns the DataFrames; the caller sinks them.
+    */
+  def multiChoiceLists(values: DataFrame, stm: Stm,
+      columns: Seq[String]): Seq[(String, DataFrame)] =
+    stm.multiChoiceCols.filter(columns.contains).map { c =>
+      c -> values.filter(col("list") === c).select(col("value").as(c))
     }
 
   /** Key-uniqueness guard for broadcast mapping tables (SURVEY.md
@@ -270,26 +299,29 @@ object CrmPipeline {
     val repaired = applyRepData(mapped, emailCol, repData)
     // S9 runs on the cleaned frame BEFORE rename/merge, as in the
     // reference (E1.7 precedes E1.8/E1.9 — main.py:671-679).
-    val lists = multiChoiceLists(repaired, stm)
+    val values = multiChoiceValues(repaired, stm)
+    val lists = multiChoiceLists(values, stm, repaired.columns.toSeq)
     val tagged = deriveTags(repaired, stm)
     val out = mapColumns(tagged, stm)
     val audit = mergeAudit(tagged, stm, emailCol)
-    PipelineResult(out, removed, lists, repaired, audit)
+    PipelineResult(out, removed, lists, values, repaired, audit)
   }
 }
 
 /** Outputs of a pipeline run: the final frame (S7/S8 sinks), the
   * removed test rows (S10 audit sink), the per-column distinct lists
-  * (S9 sinks), the shared cleaned pre-merge frame — the common
-  * ancestor of `output` AND every `multiChoice` plan, so callers that
-  * fire multiple sink actions should persist THIS frame (Spark's cache
-  * substitution then serves all of them from one materialization) —
-  * and the merge-audit channel (take/concat rows; counters via
+  * (S9 sinks) and the one (list, value) frame they are slices of, the
+  * shared cleaned pre-merge frame — the common ancestor of `output`,
+  * `multiChoiceValues` and the audit, so callers that fire multiple
+  * sink actions should persist THIS frame (Spark's cache substitution
+  * then serves all of them from one materialization) — and the
+  * merge-audit channel (take/concat rows; counters via
   * `CrmPipeline.mergeCounters`).
   */
 final case class PipelineResult(
     output: DataFrame,
     removedTestRows: DataFrame,
     multiChoice: Seq[(String, DataFrame)],
+    multiChoiceValues: DataFrame,
     cleaned: DataFrame,
     mergeAudit: DataFrame)

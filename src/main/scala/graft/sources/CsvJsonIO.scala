@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -14,13 +16,52 @@ object CsvJsonIO {
     * main.py:199-202, 373; an explicit all-string schema skips the
     * inference pass entirely, which at 100 TB avoids reading the data
     * twice). `multiLine` handles quoted embedded newlines (headers
-    * and cells).
+    * and cells). In `multiLine` mode the parser otherwise takes the
+    * first line break it meets as the line separator, even one inside a
+    * quoted header (the reference's `First\nName`); in a CRLF file that
+    * leaves a '\r' on the last header and every last-column cell. So a
+    * file whose first record ends in CRLF is read with CRLF named.
     */
   def readCsv(spark: SparkSession, path: String,
       schema: Option[StructType] = None, multiLine: Boolean = true): DataFrame = {
-    val r = spark.read.option("header", "true")
+    val r0 = spark.read.option("header", "true")
       .option("multiLine", multiLine.toString)
+    val r = if (multiLine && firstRecordEndsInCrlf(spark, path))
+      r0.option("lineSep", "\r\n") else r0
     schema.fold(r)(s => r.schema(s)).csv(path)
+  }
+
+  /** Whether the first record of the first data file under `path` (a
+    * file, directory or glob) ends in CRLF: scans a prefix of it for
+    * the first line break outside double quotes, honouring the
+    * reader's default escape (a backslash) inside them. A compressed
+    * file (`.gz`, `.bz2`, ...) is read through its Hadoop codec, as
+    * Spark reads it.
+    * Driver-side, one prefix read — file metadata, not a data pass.
+    */
+  private def firstRecordEndsInCrlf(spark: SparkSession,
+      path: String): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val files = Option(fs.globStatus(p)).toSeq.flatten.flatMap { st =>
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st)
+    }.filter(st => st.isFile &&
+      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+    files.sortBy(_.getPath.toString).headOption.exists { st =>
+      val raw = fs.open(st.getPath)
+      val in = Option(new CompressionCodecFactory(conf).getCodec(st.getPath))
+        .fold[java.io.InputStream](raw)(_.createInputStream(raw))
+      val buf = try in.readNBytes(1 << 20) finally in.close()
+      var quoted = false
+      var i = 0
+      while (i < buf.length && (quoted || (buf(i) != '\n' && buf(i) != '\r'))) {
+        if (buf(i) == '"') quoted = !quoted
+        else if (quoted && buf(i) == '\\') i += 1
+        i += 1
+      }
+      i + 1 < buf.length && buf(i) == '\r' && buf(i + 1) == '\n'
+    }
   }
 
   /** S3 — JSON-records source (the GSheet `get_all_records()` payload
@@ -73,15 +114,31 @@ object CsvJsonIO {
   def readJsonl(spark: SparkSession, path: String): DataFrame =
     spark.read.json(path)
 
-  /** S9 — per-column distinct-value sinks (main.py:458-473): one CSV
-    * per (name, frame) pair, as produced by
-    * `CrmPipeline.multiChoiceLists`. File-system-safe directory names.
+  /** S9 — per-column distinct-value sinks (main.py:458-473): one
+    * sorted CSV per (name, frame) pair, as produced by
+    * `CrmPipeline.multiChoiceLists`, under a file-system-safe directory
+    * name. Fails before any write when two names map to the same
+    * directory (`Faith?` and `Faith!`): one list would silently replace
+    * the other. Returns one write per list, not yet run; they write
+    * disjoint directories, so the caller may run them in any order or
+    * concurrently. Each write sorts inside one partition, so pass frames
+    * of one partition (a slice of `CrmPipeline.multiChoiceValues` is:
+    * its write is one job with no shuffle); a frame of several would
+    * have its last stage narrowed to one task.
     */
-  def writeDistinctLists(lists: Seq[(String, DataFrame)], dir: String): Unit =
-    lists.foreach { case (name, df) =>
-      val safe = name.replaceAll("[^A-Za-z0-9._-]", "_")
-      df.orderBy(df.columns.map(col): _*)
-        .coalesce(1).write.mode("overwrite").option("header", "true")
+  def writeDistinctLists(lists: Seq[(String, DataFrame)],
+      dir: String): Seq[() => Unit] = {
+    val named = lists.map { case (name, df) =>
+      (name, name.replaceAll("[^A-Za-z0-9._-]", "_"), df) }
+    val clashes = named.groupBy(_._2).collect {
+      case (safe, ls) if ls.size > 1 => s"$safe <- ${ls.map(_._1).mkString(" | ")}"
+    }
+    require(clashes.isEmpty,
+      s"distinct lists share a directory: ${clashes.toSeq.sorted.mkString("; ")}")
+    named.map { case (_, safe, df) => () =>
+      df.coalesce(1).sortWithinPartitions(df.columns.map(col): _*)
+        .write.mode("overwrite").option("header", "true")
         .csv(s"$dir/$safe")
     }
+  }
 }

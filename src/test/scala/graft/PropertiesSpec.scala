@@ -5,6 +5,7 @@ import org.scalacheck.Gen
 
 import graft.functions.CleanFns._
 import graft.operators.Dedup
+import graft.pipeline.CrmPipeline
 
 /** Algebraic properties over generated inputs (SURVEY.md §5.2) —
   * plain-scalacheck sampling (scalatestplus isn't in the offline
@@ -275,5 +276,28 @@ class PropertiesSpec extends SparkSpec {
           assert(q == 0L, s"round $round: zero-weight group got $q")
       }
     }
+  }
+
+  test("splitTestRows: kept and removed partition the input, as the reference defines test rows") {
+    val cell = Gen.oneOf[String](null, "", "latest", "TeSt", "clean", "x test y", "tes t")
+    val exempt = Gen.oneOf(Option.empty[Boolean], Some(true), Some(false))
+    val rows = Gen.listOfN(300, for {
+      a <- cell; b <- cell; c <- cell; e <- exempt
+    } yield (a, b, c, e)).sample.get
+    val df = rows.zipWithIndex.map { case ((a, b, c, e), i) => (i.toLong, a, b, c, e) }
+      .toDF("id", "a", "b", "c", "exempt")
+    val (kept, removed) = CrmPipeline.splitTestRows(df, col("exempt"))
+    // main.py:281-285: any cell contains "test" case-insensitively, and
+    // the row is not exempt (a null exemption is no exemption)
+    val isTest = rows.map { case (a, b, c, e) =>
+      Seq(a, b, c).exists(v => v != null && v.toLowerCase.contains("test")) &&
+        !e.contains(true)
+    }
+    val ids = isTest.indices.map(_.toLong)
+    val keptIds = kept.select("id").as[Long].collect().sorted.toSeq
+    val removedIds = removed.select("id").as[Long].collect().sorted.toSeq
+    assert(keptIds == ids.filterNot(i => isTest(i.toInt)))
+    assert(removedIds == ids.filter(i => isTest(i.toInt)))
+    assert((keptIds ++ removedIds).sorted == ids)
   }
 }

@@ -1,9 +1,15 @@
 package graft.pipeline
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Not, Or}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.functions.CleanFns.isPopulated
+import graft.sources.CsvJsonIO
 
 /** End-to-end pipeline spec over the reference-shaped fixtures
   * (FIXTURES.md §B): pins the exact semantics of
@@ -181,5 +187,54 @@ class CrmPipelineSpec extends SparkSpec {
       "a row vanished from both clean and removed")
     assert(removed.select("v").as[String].collect().toSeq ==
       Seq("contains test here"))
+  }
+
+  test("splitTestRows: the optimized keep filter has no NOT over an OR (256 columns)") {
+    // distinct per-column expressions, so no rule can merge the terms
+    val df = spark.range(3).select((0 until 256).map(i =>
+      (col("id") + i).cast("string").as(s"c$i")): _*)
+    val (clean, _) = CrmPipeline.splitTestRows(df, col("c0") === "7")
+    val conds = clean.queryExecution.optimizedPlan.collect {
+      case f: Filter => f.condition }
+    assert(conds.nonEmpty)
+    val notOverOr = conds.flatMap(_.collect { case n @ Not(_: Or) => n })
+    assert(notOverOr.isEmpty,
+      s"${notOverOr.size} NOT-over-OR nodes left: the optimizer hit its iteration cap")
+  }
+
+  test("shared-frame lists equal per-column distinct().orderBy(); each file is sorted") {
+    import spark.implicits._
+    val vals = Array(null, "", "b", "a", "B", "a b", "z", "10", "9")
+    val rnd = new scala.util.Random(11)
+    def pick(): String = vals(rnd.nextInt(vals.length))
+    val cols = Seq("Pick one?", "Pick two", "plain")
+    val df = Seq.fill(400)((pick(), pick(), pick())).toDF(cols: _*).repartition(4)
+    assert(df.rdd.getNumPartitions > 1)
+    val stm = Stm(cols.map(c => StmRow(c, inScope = true, target = c,
+      isTag = false, tagName = "",
+      customFieldType = if (c == "plain") "" else "Multiple Choice")))
+    val lists = CrmPipeline.multiChoiceLists(
+      CrmPipeline.multiChoiceValues(df, stm), stm, df.columns.toSeq)
+    assert(lists.map(_._1) == Seq("Pick one?", "Pick two"))
+    val want = lists.map { case (c, _) =>
+      c -> df.select(CrmPipeline.qcol(c)).filter(isPopulated(CrmPipeline.qcol(c)))
+        .distinct().orderBy(CrmPipeline.qcol(c)).as[String].collect().toSeq
+    }.toMap
+    lists.foreach { case (c, l) =>
+      assert(l.columns.toSeq == Seq(c))
+      assert(l.as[String].collect().toSeq == want(c))
+    }
+    val dir = Files.createTempDirectory("graft_lists").toString
+    CsvJsonIO.writeDistinctLists(lists, dir).foreach(_())
+    Seq("Pick_one_" -> "Pick one?", "Pick_two" -> "Pick two").foreach {
+      case (safe, c) =>
+        val parts = new java.io.File(s"$dir/$safe").listFiles()
+          .filter(_.getName.startsWith("part-"))
+        assert(parts.length == 1)
+        val lines = scala.io.Source.fromFile(parts.head, "UTF-8").getLines().toSeq
+        assert(lines.head == c)
+        assert(lines.tail == lines.tail.sorted, s"$safe is not sorted")
+        assert(lines.tail == want(c))
+    }
   }
 }

@@ -1,6 +1,11 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
 
 import graft.SparkSpec
 import graft.sources.CsvJsonIO
@@ -54,5 +59,46 @@ class PipelineMainSpec extends SparkSpec {
     val metaOnly = CsvJsonIO.readCsv(spark, s"$out/cols_in_meta_not_data")
       .collect().map(_.getString(0)).toSeq
     assert(metaOnly == Seq("MetaOnlyCol"))
+  }
+
+  test("run(): a failing sink fails the run only after every sink has settled") {
+    val out = Files.createTempDirectory("graft_pipe_fail").toString
+    // a regular file where the lists' directory belongs: every list
+    // write fails while the other sinks are running
+    Files.write(Paths.get(out, "custom_fields"), Array.emptyByteArray)
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentHashMap[Int, (Long, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, (e.time, Long.MaxValue))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        jobs.computeIfPresent(e.jobId, (_, se) => (se._1, e.time))
+    }
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    val base = "src/test/resources/crm"
+    sc.addSparkListener(listener)
+    val returned = try {
+      intercept[Exception] {
+        PipelineMain.run(spark,
+          dataCsv = s"$base/crm.csv",
+          stmCsv = s"$base/stm.csv",
+          relsCsv = s"$base/religions.csv",
+          outDir = out,
+          repDataPaths = Seq("Checkbox1" -> s"$base/repdata_checkbox1.csv"),
+          emailCol = "Email",
+          expectShape = None)
+      }
+      System.currentTimeMillis()
+    } finally {
+      ListenerBusAccess.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(!jobs.isEmpty)
+    jobs.forEach { (id, se) =>
+      assert(se._2 <= returned, s"job $id ran on after run() returned")
+    }
+    assert(sc.statusTracker.getActiveJobIds.isEmpty, "a sink job outlived run()")
+    assert((sc.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
+      "run() left a frame persisted")
   }
 }

@@ -48,11 +48,90 @@ class CsvJsonIOSpec extends SparkSpec {
     val lists = Seq(
       "Are you a person of faith?" -> Seq("A", "B").toDF("v"),
       "Checkbox/1" -> Seq("X").toDF("v"))
-    CsvJsonIO.writeDistinctLists(lists, dir)
+    CsvJsonIO.writeDistinctLists(lists, dir).foreach(_())
     val subdirs = new java.io.File(dir).listFiles().map(_.getName).sorted
     assert(subdirs.toSeq == Seq("Are_you_a_person_of_faith_", "Checkbox_1"))
     assert(CsvJsonIO.readCsv(spark, s"$dir/Checkbox_1")
       .as[String].collect().toSeq == Seq("X"))
+  }
+
+  test("distinct lists whose names share a directory fail before any write") {
+    val dir = tmp() + "/clash"
+    val lists = Seq(
+      "Faith?" -> Seq("A").toDF("v"),
+      "Faith!" -> Seq("B").toDF("v"),
+      "Other" -> Seq("C").toDF("v"))
+    val e = intercept[IllegalArgumentException] {
+      CsvJsonIO.writeDistinctLists(lists, dir).foreach(_())
+    }
+    assert(e.getMessage.contains("Faith_ <- Faith? | Faith!"))
+    assert(!new java.io.File(dir).exists(), "a list was written before the check")
+  }
+
+  test("CRLF files read without a stray CR, also with a bare LF in a quoted header") {
+    def read(text: String): (Seq[String], Seq[String]) = {
+      val f = tmp() + "/data.csv"
+      Files.write(java.nio.file.Paths.get(f), text.getBytes("UTF-8"))
+      val df = CsvJsonIO.readCsv(spark, f)
+      (df.columns.toSeq,
+        df.select(df.columns.last).as[String].collect().toSeq)
+    }
+    // the reference's export: CRLF records, a bare LF inside "First\nName"
+    val mixed = read("\"First\nName\",Last Col\r\nAnn,v1\r\nBo,\"v,2\"\r\n")
+    // uniformly CRLF, the quoted header's break included
+    val uniform = read("\"First\r\nName\",Last Col\r\nAnn,v1\r\nBo,\"v,2\"\r\n")
+    // quoted content stays verbatim, as in the reference's pandas read
+    assert(mixed == (Seq("First\nName", "Last Col"), Seq("v1", "v,2")))
+    assert(uniform == (Seq("First\r\nName", "Last Col"), Seq("v1", "v,2")))
+    // a file with LF records is untouched by the CRLF handling
+    assert(read("\"First\nName\",Last Col\nAnn,v1\n") ==
+      (Seq("First\nName", "Last Col"), Seq("v1")))
+    // an escaped quote inside a quoted header does not end the quotes
+    assert(read("\"Say \\\"hi\nthere\\\" ok\",Last Col\r\nAnn,v1\r\n") ==
+      (Seq("Say \"hi\nthere\" ok", "Last Col"), Seq("v1")))
+  }
+
+  test("compressed CSV files get the CRLF check on their decompressed bytes") {
+    def read(name: String, bytes: Array[Byte]): (Seq[String], Seq[String]) = {
+      val f = tmp() + "/" + name
+      Files.write(java.nio.file.Paths.get(f), bytes)
+      val df = CsvJsonIO.readCsv(spark, f)
+      (df.columns.toSeq,
+        df.select(df.columns.last).as[String].collect().toSeq)
+    }
+    def gzip(text: String): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream
+      val gz = new java.util.zip.GZIPOutputStream(out)
+      gz.write(text.getBytes("UTF-8"))
+      gz.close()
+      out.toByteArray
+    }
+    // A gzip member holding one stored (uncompressed) deflate block. Its
+    // 16-bit length field is little-endian, so a length of 0x0A0D puts
+    // the raw bytes CR LF right after the header, outside any quote.
+    def storedGzip(data: Array[Byte]): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream
+      def le(v: Int, n: Int): Unit = (0 until n).foreach(k => out.write(v >>> (8 * k)))
+      Seq(0x1f, 0x8b, 8, 0, 0, 0, 0, 0, 0, 0xff).foreach(b => out.write(b))
+      out.write(1) // final block, stored
+      le(data.length, 2)
+      le(~data.length, 2)
+      out.write(data)
+      val crc = new java.util.zip.CRC32
+      crc.update(data)
+      le(crc.getValue.toInt, 4)
+      le(data.length, 4)
+      out.toByteArray
+    }
+    val mixed = gzip("\"First\nName\",Last Col\r\nAnn,v1\r\nBo,\"v,2\"\r\n")
+    assert(read("mixed.csv.gz", mixed) ==
+      (Seq("First\nName", "Last Col"), Seq("v1", "v,2")))
+    val head = "\"First\nName\",Last Col\nAnn,v1\nBo,"
+    val pad = "x" * (0x0A0D - head.length - 1)
+    val lf = (head + pad + "\n").getBytes("UTF-8")
+    assert(lf.length == 0x0A0D)
+    assert(read("lf.csv.gz", storedGzip(lf)) ==
+      (Seq("First\nName", "Last Col"), Seq("v1", pad)))
   }
 
   test("JSONL round-trip: ordered disjoint shards, one object per line") {
