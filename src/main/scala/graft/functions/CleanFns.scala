@@ -88,27 +88,19 @@ object CleanFns {
 
   /** P3 — any-column case-insensitive substring predicate
     * (main.py:281-285): true if ANY of `cols` contains `needle`.
-    * Native `exists` over an `array` — no UDF, codegen-friendly.
+    * ONE `contains` over the row's cells joined with NUL: a needle
+    * without NUL can only match inside one cell, and NUL is neither
+    * cased nor case-ignorable, so lowering the joined string lowers
+    * each cell as it would alone (Greek final sigma included). A null
+    * cell is skipped by `concat_ws`, so it reads as "no match" and the
+    * predicate is never null. One expression instead of a column-wide
+    * OR chain keeps the plan small at CRM width (297 columns), negated
+    * or not.
     */
-  def anyColContains(cols: Seq[Column], needle: String): Column =
-    // A fused OR chain of per-column contains: stays inside whole-stage
-    // codegen with short-circuiting (the exists(array(...)) form builds
-    // a transient array per row and evaluates interpreted). The
-    // coalesce-to-'' keeps it three-valued-logic-free: a null cell must
-    // read as "no match", not poison the predicate to null (which would
-    // silently drop the row in a filter).
-    cols.map(colContains(_, needle)).reduce(_ || _)
-
-  /** P3 negated — true if NONE of `cols` contains `needle`: the
-    * negation-normal form of `!anyColContains`, an AND chain of
-    * per-column `NOT contains`. Build the negated predicate with this,
-    * not `!` over the OR chain: `BooleanSimplification` pushes that `NOT`
-    * down one OR level per optimizer pass, so at CRM width (297
-    * columns) each operator-optimization batch runs to its iteration cap.
-    */
-  def noColContains(cols: Seq[Column], needle: String): Column =
-    cols.map(c => !colContains(c, needle)).reduce(_ && _)
-
-  private def colContains(c: Column, needle: String): Column =
-    coalesce(lower(c.cast("string")), lit("")).contains(needle.toLowerCase)
+  def anyColContains(cols: Seq[Column], needle: String): Column = {
+    require(cols.nonEmpty, "anyColContains needs at least one column")
+    require(!needle.contains('\u0000'), "the needle must not contain NUL")
+    lower(concat_ws("\u0000", cols.map(_.cast("string")): _*))
+      .contains(needle.toLowerCase)
+  }
 }

@@ -1,9 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.functions.CleanFns._
+import graft.sources.CsvJsonIO
 
 /** The reference ETL pipeline (/root/reference/main.py, lifecycle E1 —
   * SURVEY.md §3) rebuilt Spark-first: every stage is a lazy DataFrame
@@ -12,19 +17,17 @@ import graft.functions.CleanFns._
   * row loops of the reference (`iterrows`, `apply(axis=1)`) become
   * native expressions.
   *
-  * Scale posture (100 TB): mapping tables are broadcast; composite
-  * column transforms compile to single `select` projections (not
-  * hundreds of chained withColumn — quadratic analysis at 297-column
-  * width); nothing collects the fact table to the driver.
+  * Scale posture (100 TB): mapping tables are collected once and
+  * broadcast from the driver (the repeated-data tables as one wide
+  * table, so one join); composite column transforms compile to single
+  * `select` projections (not hundreds of chained withColumn —
+  * quadratic analysis at 297-column width); nothing collects the fact
+  * table to the driver.
   */
 object CrmPipeline {
 
-  /** Resolve a column by its literal name — CRM headers contain dots
-    * and parens ("Parliamentary Constituency (U.K.)"), which `col()`
-    * would parse as nested-field access.
-    */
-  private[pipeline] def qcol(name: String): Column =
-    col("`" + name.replace("`", "") + "`")
+  /** Resolve a column by its literal name (`CsvJsonIO.literalCol`). */
+  private[pipeline] def qcol(name: String): Column = CsvJsonIO.literalCol(name)
 
   /** S4 — header normalization: strip embedded newlines from column
     * names before metadata matching (main.py:206-207).
@@ -32,14 +35,17 @@ object CrmPipeline {
   def normalizeHeaders(df: DataFrame): DataFrame =
     df.toDF(df.columns.map(_.replace("\n", "")): _*)
 
-  /** S5 — exact-shape assertion (main.py:213-222). One count() action;
-    * driver-side, fail-fast before any heavy work.
+  /** S5 — exact-shape assertion (main.py:213-222): the columns of
+    * `df`, then the rows of `rows`, a projection of `df` (the same rows,
+    * fewer columns — the persisted in-scope extract, which this one
+    * count() materializes). Fail-fast before any heavy work.
     */
-  def assertShape(df: DataFrame, expectedRows: Long, expectedCols: Int): Unit = {
+  def assertShape(df: DataFrame, rows: DataFrame, expectedRows: Long,
+      expectedCols: Int): Unit = {
     val cols = df.columns.length
     require(cols == expectedCols, s"expected $expectedCols columns, got $cols")
-    val rows = df.count()
-    require(rows == expectedRows, s"expected $expectedRows rows, got $rows")
+    val n = rows.count()
+    require(n == expectedRows, s"expected $expectedRows rows, got $n")
   }
 
   /** S6/U1 — symmetric schema reconciliation against the STM
@@ -69,11 +75,8 @@ object CrmPipeline {
     // both predicates NULL, and a NULL predicate fails BOTH filters —
     // the row would silently vanish from clean AND removed.
     val exempted = coalesce(exempt, lit(false))
-    val cols = df.columns.toSeq.map(qcol)
-    // The keep side is `!isTest` already in negation-normal form, so
-    // the optimizer has no NOT to push through a column-wide OR chain.
-    (df.filter(noColContains(cols, "test") || exempted),
-      df.filter(anyColContains(cols, "test") && !exempted))
+    val isTest = anyColContains(df.columns.toSeq.map(qcol), "test")
+    (df.filter(!isTest || exempted), df.filter(isTest && !exempted))
   }
 
   /** F1+F2 — frame-wide fill + whitespace normalization
@@ -100,40 +103,101 @@ object CrmPipeline {
   /** J1 — mapping-table join (religion cleanup, main.py:426-433):
     * overwrite `targetCol` with the mapped replacement; unmatched rows
     * are blanked (NaN→'' in the reference, main.py:451). The mapping is
-    * asserted unique on its key (pandas would silently explode rows —
-    * SURVEY.md §7.5.4) and broadcast: it is bounded metadata, the fact
-    * side never shuffles.
+    * collected once (one job), checked unique on its key on the driver
+    * (pandas would silently explode rows — SURVEY.md §7.5.4) and
+    * broadcast from the collected rows: it is bounded metadata, the
+    * fact side never shuffles.
     */
   def applyMapping(df: DataFrame, targetCol: String, mapping: DataFrame,
-      mapKey: String, mapVal: String): DataFrame = {
-    assertUniqueKey(mapping, mapKey)
-    val m = broadcast(mapping.select(
-      qcol(mapKey).as("__k"), qcol(mapVal).as("__v")))
-    df.join(m, qcol(targetCol) === m("__k"), "left")
-      .select(df.columns.map {
-        case `targetCol` => fillEmpty(col("__v")).as(targetCol)
-        case c => qcol(c)
-      }: _*)
-  }
+      mapKey: String, mapVal: String): DataFrame =
+    joinCollected(df, targetCol,
+      Seq(targetCol -> collectMapping(mapping, mapKey, mapVal)))
 
   /** J2 — per-column repeated-data cleanup joined on an email key
     * (main.py:436-451): for each dirty column, LEFT JOIN its mapping on
     * Email and REPLACE the column with the mapped value — rows whose
     * email is absent from the mapping get their value BLANKED, not
-    * preserved (reference behavior, pinned by spec). Folds into one
-    * plan of broadcast joins.
+    * preserved (reference behavior, pinned by spec). Each table is
+    * collected once; the tables then join in ONE broadcast join over a
+    * wide (key, v_0..v_n) table built on the driver, with the semantics
+    * of joining them one after another: a column listed twice takes
+    * the later table, a null email matches nothing. An entry for the
+    * email column itself re-keys the entries after it, so the fold is
+    * split after it (and wherever the key type changes) into one join
+    * per part.
     */
   def applyRepData(df: DataFrame, emailCol: String,
-      repData: Seq[(String, DataFrame)]): DataFrame =
-    repData.foldLeft(df) { case (acc, (c, m)) =>
-      assertUniqueKey(m, emailCol)
-      val mm = broadcast(m.select(qcol(emailCol).as("__k"), qcol(c).as("__v")))
-      acc.join(mm, qcol(emailCol) === mm("__k"), "left")
-        .select(acc.columns.map {
-          case `c` => fillEmpty(col("__v")).as(c)
-          case other => qcol(other)
-        }: _*)
+      repData: Seq[(String, DataFrame)]): DataFrame = {
+    val tables = repData.map { case (c, m) => c -> collectMapping(m, emailCol, c) }
+    val parts = tables.foldLeft(Vector.empty[Vector[(String, Collected)]]) {
+      case (ps :+ p, e) if p.last._1 != emailCol &&
+          p.head._2.keyType == e._2.keyType => ps :+ (p :+ e)
+      case (ps, e) => ps :+ Vector(e)
     }
+    parts.foldLeft(df)(joinCollected(_, emailCol, _))
+  }
+
+  /** A mapping table collected to the driver: its key and value types
+    * and, per non-null key, the key as collected and its value.
+    */
+  private final case class Collected(keyType: DataType, valueType: DataType,
+      byKey: collection.Map[Any, (Any, Any)])
+
+  /** Collects `(key, value)` of a mapping table in one job and checks
+    * that no non-null key repeats. A null key can never match in the
+    * equi-join (null === x is never true), so it cannot explode rows:
+    * it is dropped, and does not fail the check.
+    */
+  private def collectMapping(m: DataFrame, key: String,
+      value: String): Collected = {
+    val kv = m.select(qcol(key), qcol(value))
+    val byKey = mutable.LinkedHashMap.empty[Any, (Any, Any)]
+    var total = 0L
+    kv.collect().foreach { r =>
+      if (!r.isNullAt(0)) {
+        total += 1
+        byKey(joinKey(r.get(0))) = (r.get(0), r.get(1))
+      }
+    }
+    require(total == byKey.size,
+      s"mapping table not unique on '$key' (${byKey.size} distinct of $total non-null keys)")
+    Collected(kv.schema(0).dataType, kv.schema(1).dataType, byKey)
+  }
+
+  /** A collected key as the equi-join compares it: binary by content,
+    * and -0.0 equal to 0.0.
+    */
+  private def joinKey(k: Any): Any = k match {
+    case b: Array[Byte] => b.toSeq
+    case d: Double if d == 0.0 => 0.0
+    case f: Float if f == 0.0f => 0.0f
+    case other => other
+  }
+
+  /** LEFT JOIN `df` on `keyCol` against the tables, all keyed by the
+    * same value of `keyCol`, in ONE broadcast join, and replace each
+    * table's column (when `df` has it) with its value, blanked where
+    * the key is missing from that table. A column listed twice takes
+    * the later table.
+    */
+  private def joinCollected(df: DataFrame, keyCol: String,
+      tables: Seq[(String, Collected)]): DataFrame = {
+    val last = tables.toMap
+    val cols = tables.map(_._1).distinct.filter(df.columns.contains)
+    val rows = cols.flatMap(last(_).byKey.keys).distinct.map { k =>
+      Row.fromSeq(cols.flatMap(last(_).byKey.get(k)).head._1 +:
+        cols.map(c => last(c).byKey.get(k).map(_._2).orNull))
+    }
+    val schema = StructType(StructField("__k", tables.head._2.keyType) +:
+      cols.indices.map(i => StructField(s"__v$i", last(cols(i)).valueType)))
+    val wide = broadcast(df.sparkSession.createDataFrame(rows.asJava, schema))
+    val slot = cols.zipWithIndex.toMap
+    df.join(wide, qcol(keyCol) === wide("__k"), "left")
+      .select(df.columns.map(c => slot.get(c) match {
+        case Some(i) => fillEmpty(wide(s"__v$i")).as(c)
+        case None => qcol(c)
+      }): _*)
+  }
 
   /** F11 — tag derivation (main.py:476-511): one ArrayType expression —
     * per populated tag column add its (trimmed) tag, dedup, comma-join.
@@ -263,23 +327,12 @@ object CrmPipeline {
       c -> values.filter(col("list") === c).select(col("value").as(c))
     }
 
-  /** Key-uniqueness guard for broadcast mapping tables (SURVEY.md
-    * §7.5.4): cheap on bounded metadata, prevents silent row explosion.
-    */
-  private def assertUniqueKey(m: DataFrame, key: String): Unit = {
-    // count only non-null keys: a null key can never match in the
-    // equi-join (null === x is never true), so it cannot explode rows
-    // and must not fail the guard.
-    val Array(total, distinct) = m.agg(
-      count(qcol(key)), countDistinct(qcol(key))).collect().head
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    require(total == distinct,
-      s"mapping table not unique on '$key' ($distinct distinct of $total non-null keys)")
-  }
-
   /** E1 — the full default run (main.py:650-684), stages 4-9, as one
     * lazy plan: project → delete test rows → normalize → fixes →
     * mapping joins → tags → rename/merge. Sinks are the caller's.
+    * `data` is the raw extract or, as `PipelineMain` passes it, its
+    * persisted in-scope projection (projecting again is a no-op). The
+    * only jobs it starts are one collect per mapping table.
     */
   def run(
       data: DataFrame,

@@ -4,6 +4,8 @@ import java.util.UUID
 import java.util.concurrent.{ExecutionException, Executors}
 import java.util.concurrent.atomic.AtomicReference
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.SparkSession
 
 import graft.sources.CsvJsonIO
@@ -12,6 +14,10 @@ import graft.sources.CsvJsonIO
   * 650-688) as a Spark application: load metadata snapshots, run the
   * pipeline, write the full/sample/audit/distinct-list sinks, print the
   * per-stage report the reference logs for its human reviewer.
+  *
+  * The extract is parsed once: its in-scope projection is persisted,
+  * and the shape count, the removed rows and the cleaned frame read
+  * that copy. Each mapping table is read by one collect.
   *
   * The sinks are independent actions over a few persisted frames.
   * After the removed-rows sink, the rest run concurrently on a small
@@ -25,6 +31,8 @@ import graft.sources.CsvJsonIO
   *   PipelineMain <dataCsv> <stmCsv> <relsCsv> <outDir>
   *     [--repdata col=csvPath ...] [--email-col NAME]
   *     [--expect-shape ROWSxCOLS]
+  * An unknown argument, a flag without its value, a malformed value or
+  * a repeated flag other than `--repdata` fails with the usage message.
   *
   * E2 (--meta, GSheet fetch) is out of scope (network); its parse stage
   * is `CsvJsonIO.fromJsonRecords`. E3 (--setup) is filesystem prep the
@@ -32,24 +40,52 @@ import graft.sources.CsvJsonIO
   */
 object PipelineMain {
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 4,
-      "usage: PipelineMain <dataCsv> <stmCsv> <relsCsv> <outDir> " +
-        "[--repdata col=csv ...] [--email-col NAME] [--expect-shape RxC]")
-    val Array(dataCsv, stmCsv, relsCsv, outDir) = args.take(4)
-    val rest = args.drop(4)
-    val repData = rest.sliding(2, 2).collect {
-      case Array("--repdata", spec) =>
-        val Array(c, p) = spec.split("=", 2)
-        (c, p)
-    }.toSeq
-    val emailCol = rest.sliding(2, 2).collectFirst {
-      case Array("--email-col", v) => v }.getOrElse("Email")
-    val expectShape = rest.sliding(2, 2).collectFirst {
-      case Array("--expect-shape", v) =>
-        val Array(r, c) = v.split("x", 2); (r.toLong, c.toInt)
-    }
+  val usage: String =
+    "usage: PipelineMain <dataCsv> <stmCsv> <relsCsv> <outDir> " +
+      "[--repdata col=csv ...] [--email-col NAME] [--expect-shape RxC]"
 
+  /** The parsed command line. */
+  final case class Args(dataCsv: String, stmCsv: String, relsCsv: String,
+      outDir: String, repData: Seq[(String, String)] = Seq.empty,
+      emailCol: String = "Email", expectShape: Option[(Long, Int)] = None)
+
+  /** Parses the command line: four paths, then flags with one value
+    * each. `--repdata` may repeat; the other flags may not. Anything
+    * else — a missing or malformed value, an unknown or repeated flag —
+    * fails with an `IllegalArgumentException` that names the problem
+    * and carries [[usage]].
+    */
+  def parseArgs(args: Seq[String]): Args = {
+    def bad(why: String): Nothing =
+      throw new IllegalArgumentException(s"$why\n$usage")
+    if (args.length < 4) bad(s"expected 4 paths, got ${args.length} arguments")
+    val Seq(dataCsv, stmCsv, relsCsv, outDir) = args.take(4)
+    @tailrec def flags(rest: List[String], seen: Set[String], a: Args): Args =
+      rest match {
+        case Nil => a
+        case f :: _ if f != "--repdata" && seen(f) => bad(s"$f given twice")
+        case "--repdata" :: v :: tail => v.split("=", 2) match {
+          case Array(c, p) if c.nonEmpty && p.nonEmpty =>
+            flags(tail, seen, a.copy(repData = a.repData :+ (c -> p)))
+          case _ => bad(s"--repdata expects col=csvPath, got '$v'")
+        }
+        case "--email-col" :: v :: tail =>
+          flags(tail, seen + "--email-col", a.copy(emailCol = v))
+        case "--expect-shape" :: v :: tail => v.split("x", 2) match {
+          case Array(r, c) if r.toLongOption.nonEmpty && c.toIntOption.nonEmpty =>
+            flags(tail, seen + "--expect-shape",
+              a.copy(expectShape = Some((r.toLong, c.toInt))))
+          case _ => bad(s"--expect-shape expects ROWSxCOLS, got '$v'")
+        }
+        case f :: Nil if Set("--repdata", "--email-col", "--expect-shape")(f) =>
+          bad(s"$f needs a value")
+        case f :: _ => bad(s"unknown argument '$f'")
+      }
+    flags(args.drop(4).toList, Set.empty, Args(dataCsv, stmCsv, relsCsv, outDir))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val a = parseArgs(args.toSeq)
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER",
         s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
@@ -58,8 +94,8 @@ object PipelineMain {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    try run(spark, dataCsv, stmCsv, relsCsv, outDir, repData, emailCol,
-      expectShape)
+    try run(spark, a.dataCsv, a.stmCsv, a.relsCsv, a.outDir, a.repData,
+      a.emailCol, a.expectShape)
     finally spark.stop()
   }
 
@@ -74,43 +110,55 @@ object PipelineMain {
 
     def log(s: String): Unit = println(s"[pipeline] $s")
 
-    val raw = CsvJsonIO.readCsv(spark, dataCsv)
-    val data = CrmPipeline.normalizeHeaders(raw)
-    expectShape.foreach { case (r, c) =>
-      CrmPipeline.assertShape(data, r, c)
-      log(s"shape ok: $r x $c")
-    }
-
+    val data = CrmPipeline.normalizeHeaders(CsvJsonIO.readCsv(spark, dataCsv))
     val stm = Stm.fromDataFrame(CsvJsonIO.readCsv(spark, stmCsv))
     stm.validate()
-    // S6 report sinks (main.py:238-247): both column diffs go to CSV
-    // files for the human reviewer, not just the log.
-    val (dataOnly, metaOnly) = CrmPipeline.reconcileSchema(data, stm)
-    if (dataOnly.nonEmpty) log(s"data cols missing from meta: ${dataOnly.mkString(", ")}")
-    if (metaOnly.nonEmpty) log(s"meta cols missing from data: ${metaOnly.mkString(", ")}")
-    import spark.implicits._
-    CsvJsonIO.writeCsv(dataOnly.toDF("column_in_data_not_meta"),
-      s"$outDir/cols_in_data_not_meta", single = true)
-    CsvJsonIO.writeCsv(metaOnly.toDF("column_in_meta_not_data"),
-      s"$outDir/cols_in_meta_not_data", single = true)
+    // The extract is parsed once: the shape count, the removed rows and
+    // the cleaned frame all read this persisted in-scope projection.
+    val extract = CrmPipeline.projectInScope(data, stm).persist()
+    try {
+      expectShape.foreach { case (r, c) =>
+        CrmPipeline.assertShape(data, extract, r, c)
+        log(s"shape ok: $r x $c")
+      }
 
-    val rels = CsvJsonIO.readCsv(spark, relsCsv)
-    val repData = repDataPaths.map { case (c, p) =>
-      c -> CsvJsonIO.readCsv(spark, p) }
+      // S6 report sinks (main.py:238-247): both column diffs go to CSV
+      // files for the human reviewer, not just the log.
+      val (dataOnly, metaOnly) = CrmPipeline.reconcileSchema(data, stm)
+      if (dataOnly.nonEmpty) log(s"data cols missing from meta: ${dataOnly.mkString(", ")}")
+      if (metaOnly.nonEmpty) log(s"meta cols missing from data: ${metaOnly.mkString(", ")}")
+      import spark.implicits._
+      CsvJsonIO.writeCsv(dataOnly.toDF("column_in_data_not_meta"),
+        s"$outDir/cols_in_data_not_meta", single = true)
+      CsvJsonIO.writeCsv(metaOnly.toDF("column_in_meta_not_data"),
+        s"$outDir/cols_in_meta_not_data", single = true)
 
-    val result = CrmPipeline.run(
-      data = raw,
-      stm = stm,
-      testExempt = CrmCleanups.testExemption(data),
-      fixes = CrmCleanups.fixes,
-      mappings =
-        if (data.columns.contains("Are you a person of faith?"))
-          Seq(("Are you a person of faith?", rels,
-            "Values in Data", "Replacement Values"))
-        else Seq.empty,
-      emailCol = emailCol,
-      repData = repData)
+      val rels = CsvJsonIO.readCsv(spark, relsCsv)
+      val repData = repDataPaths.map { case (c, p) =>
+        c -> CsvJsonIO.readCsv(spark, p) }
 
+      val result = CrmPipeline.run(
+        data = extract,
+        stm = stm,
+        testExempt = CrmCleanups.testExemption(data),
+        fixes = CrmCleanups.fixes,
+        mappings =
+          if (data.columns.contains("Are you a person of faith?"))
+            Seq(("Are you a person of faith?", rels,
+              "Values in Data", "Replacement Values"))
+          else Seq.empty,
+        emailCol = emailCol,
+        repData = repData)
+      sink(spark, result, outDir, log)
+    } finally extract.unpersist()
+  }
+
+  /** Persists what the sinks share, runs the sinks and prints the
+    * report; the persisted frames are released once every sink has
+    * settled.
+    */
+  private def sink(spark: SparkSession, result: PipelineResult,
+      outDir: String, log: String => Unit): Unit = {
     // Every sink fires at least one action, so persist what they share:
     // the cleaned frame (ancestor of the output, the audit AND the list
     // values — cache substitution serves them all from one

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -92,8 +92,15 @@ object CsvJsonIO {
     */
   def writeSample(df: DataFrame, path: String, orderKey: String,
       n: Int = 10000): Unit =
-    df.orderBy(col(orderKey)).limit(n)
+    df.orderBy(literalCol(orderKey)).limit(n)
       .coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
+
+  /** A column by its literal name: CRM headers contain dots and parens
+    * (`Parliamentary Constituency (U.K.)`), which `col()` would parse
+    * as nested-field access.
+    */
+  private[graft] def literalCol(name: String): Column =
+    col("`" + name.replace("`", "``") + "`")
 
   /** JSONL (one JSON object per line) sink/source round-trip — the
     * interchange format most training-data tooling consumes. The sink
@@ -136,7 +143,7 @@ object CsvJsonIO {
     require(clashes.isEmpty,
       s"distinct lists share a directory: ${clashes.toSeq.sorted.mkString("; ")}")
     named.map { case (_, safe, df) => () =>
-      df.coalesce(1).sortWithinPartitions(df.columns.map(col): _*)
+      df.coalesce(1).sortWithinPartitions(df.columns.map(literalCol): _*)
         .write.mode("overwrite").option("header", "true")
         .csv(s"$dir/$safe")
     }

@@ -278,6 +278,33 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
+  test("anyColContains equals the per-column OR of lower(cell) contains needle") {
+    // NUL inside cells, Greek sigma (final-sigma lowering is
+    // context-sensitive) and İ (lowers to two code points)
+    val piece = Gen.oneOf("test", "TeSt", "te", "st", "\u0000", "Σ", "ΑΣ", "σ",
+      "İ", "i", " ", "x")
+    val cell = Gen.frequency(1 -> Gen.const[String](null),
+      5 -> Gen.choose(0, 3).flatMap(n => Gen.listOfN(n, piece).map(_.mkString)))
+    val rows = Gen.listOfN(400, Gen.listOfN(3, cell)).sample.get
+    val df = rows.zipWithIndex.map { case (Seq(a, b, c), i) => (i.toLong, a, b, c) }
+      .toDF("id", "a", "b", "c")
+    val cells = Seq(col("a"), col("b"), col("c"))
+    val needles = Seq("test", "es", "st", "σ", "ς", "ας", "ασ", "i\u0307", "i", "x σ", "")
+    val checks = needles.flatMap { n =>
+      Seq(anyColContains(cells, n),
+        cells.map(c => coalesce(lower(c), lit("")).contains(n.toLowerCase)).reduce(_ || _))
+    }
+    df.select(col("id") +: checks: _*).collect().foreach { r =>
+      needles.indices.foreach { i =>
+        assert(r.getBoolean(1 + 2 * i) == r.getBoolean(2 + 2 * i),
+          s"needle '${needles(i)}' on row ${rows(r.getLong(0).toInt)}")
+      }
+    }
+    assert(df.filter(anyColContains(cells, "σ")).count() > 0)
+    assert(df.filter(anyColContains(cells, "ς")).count() > 0)
+    intercept[IllegalArgumentException](anyColContains(cells, "a\u0000b"))
+  }
+
   test("splitTestRows: kept and removed partition the input, as the reference defines test rows") {
     val cell = Gen.oneOf[String](null, "", "latest", "TeSt", "clean", "x test y", "tes t")
     val exempt = Gen.oneOf(Option.empty[Boolean], Some(true), Some(false))

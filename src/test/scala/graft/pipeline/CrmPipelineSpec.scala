@@ -2,9 +2,11 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Not, Or}
-import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -162,6 +164,104 @@ class CrmPipelineSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       CrmPipeline.applyMapping(df, "c", dup, "Values in Data", "Replacement Values")
     }
+  }
+
+  test("duplicate non-null keys fail both mapping kinds; null keys are accepted") {
+    import spark.implicits._
+    val df = Seq(("a", "x"), (null, "y")).toDF("Email", "v")
+    val dup = Seq(("a", "1"), ("b", "2"), ("a", "3"), (null, "4")).toDF("Email", "v")
+    val msg = "mapping table not unique on 'Email' (2 distinct of 3 non-null keys)"
+    val e1 = intercept[IllegalArgumentException] {
+      CrmPipeline.applyMapping(df, "v", dup, "Email", "v") }
+    val e2 = intercept[IllegalArgumentException] {
+      CrmPipeline.applyRepData(df, "Email", Seq("v" -> dup)) }
+    assert(e1.getMessage.contains(msg) && e2.getMessage.contains(msg))
+    val nulls = Seq(("a", "1"), (null, "2"), (null, "3")).toDF("Email", "v")
+    val mapped = CrmPipeline.applyMapping(df, "Email", nulls, "Email", "v")
+      .as[(String, String)].collect().toSeq
+    assert(mapped.sortBy(_._2) == Seq(("1", "x"), ("", "y")))
+    val repaired = CrmPipeline.applyRepData(df, "Email", Seq("v" -> nulls))
+      .as[(String, String)].collect().toSeq
+    assert(repaired.sortBy(_._2) == Seq((null, ""), ("a", "1")))
+  }
+
+  /** Reference for `applyRepData`: one broadcast LEFT JOIN per entry,
+    * in order, each replacing its column with the mapped value ('' when
+    * unmatched). */
+  private def foldRepData(df: DataFrame, emailCol: String,
+      repData: Seq[(String, DataFrame)]): DataFrame =
+    repData.foldLeft(df) { case (acc, (c, m)) =>
+      val mm = broadcast(m.select(col(emailCol).as("__k"), col(c).as("__v")))
+      acc.join(mm, col(emailCol) === mm("__k"), "left")
+        .select(acc.columns.map {
+          case `c` => coalesce(mm("__v"), lit("")).as(c)
+          case other => col(other)
+        }: _*)
+    }
+
+  test("repeated-data tables join in one pass with the semantics of the sequential fold") {
+    import spark.implicits._
+    val df = Seq((1, "e1", "a1", "b1", "c1"), (2, "e2", "a2", "b2", "c2"),
+      (3, "e3", "a3", "b3", "c3"), (4, null, "a4", "b4", "c4"),
+      (5, "e5", "a5", "b5", "c5"))
+      .toDF("id", "Email", "a", "b", "c")
+    def table(c: String, kv: (String, String)*) = kv.toDF("Email", c)
+    val repData = Seq(
+      "a" -> table("a", "e1" -> "A1", "e2" -> null, (null, "AN")), // e3, e5 missing
+      "b" -> table("b", "e1" -> "B1", "e3" -> "B3"),
+      "zz" -> table("zz", "e1" -> "Z"),                             // not in df
+      "b" -> table("b", "e2" -> "B2", "e3" -> "B3'"),               // b again: later wins
+      // keyed on the email column itself: emails it lacks become ''
+      "Email" -> Seq("e1", "e2", "e5", "").toDF("Email"),
+      "c" -> table("c", "e1" -> "C1", "e3" -> "C3", "" -> "C-blank"),
+      "Email" -> Seq("e1").toDF("Email"),
+      "a" -> table("a", "e1" -> "A1'", "" -> "A-blank"))
+    def rows(f: DataFrame) = f.orderBy("id").collect().toSeq
+    val got = CrmPipeline.applyRepData(df, "Email", repData)
+    assert(got.columns.toSeq == df.columns.toSeq)
+    val want = foldRepData(df, "Email", repData)
+    assert(rows(got) == rows(want))
+    // the cases are exercised: b takes its later table (e1 missing
+    // there → blank) and the null email matches nothing; the email
+    // entry blanks e3 and the null email, which then pick up the ''
+    // entries of c
+    assert(rows(want).map(_.getString(3)) == Seq("", "B2", "B3'", "", ""))
+    assert(rows(want).map(_.getString(4)) == Seq("C1", "", "C-blank", "C-blank", ""))
+    // tables keyed by different types are not merged into one key column
+    val nums = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
+    val typed = Seq(
+      "v" -> Seq((1L, "one")).toDF("k", "v"),
+      "v" -> Seq((2, "two")).toDF("k", "v"))
+    assert(rows(CrmPipeline.applyRepData(nums, "k", typed).withColumnRenamed("k", "id")) ==
+      rows(foldRepData(nums, "k", typed).withColumnRenamed("k", "id")))
+  }
+
+  test("11 repeated-data tables: one collect job per mapping table, at most 2 joins") {
+    val cols = Seq("Checkbox1", "Interest", "Newsletter", "Zip", "City",
+      "Address 1", "Home Phone", "Work Phone", "Join Date", "Last Name",
+      "Parliamentary Constituency (U.K.)")
+    val repData = cols.map(c => c ->
+      readCsv(res("repdata_checkbox1.csv")).select(col("Email"), col("Checkbox1").as(c)))
+    val exempt = CrmCleanups.testExemption(CrmPipeline.normalizeHeaders(data))
+    val (stm0, rels0) = (stm, rels) // their header reads are not the run's jobs
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    val r = try {
+      val r = CrmPipeline.run(data, stm0, exempt, CrmCleanups.fixes,
+        Seq(("Are you a person of faith?", rels0, "Values in Data", "Replacement Values")),
+        "Email", repData)
+      ListenerBusAccess.drain(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() <= 1 + repData.size, s"${jobs.get()} jobs for 12 mapping tables")
+    val joins = r.cleaned.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.size <= 2, s"${joins.size} joins in the cleaned plan")
+    assert(r.output.count() == 6)
   }
 
   test("in-scope STM row with no target and not a tag is a hard error (main.py:530-534)") {

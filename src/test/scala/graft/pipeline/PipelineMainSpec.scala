@@ -101,4 +101,33 @@ class PipelineMainSpec extends SparkSpec {
     assert((sc.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
       "run() left a frame persisted")
   }
+
+  private val paths = Seq("d.csv", "s.csv", "r.csv", "out")
+
+  test("parseArgs: paths, repeated --repdata, email column and shape") {
+    val a = PipelineMain.parseArgs(paths ++ Seq("--repdata", "A=a.csv",
+      "--expect-shape", "10x297", "--repdata", "B=x=b.csv", "--email-col", "Mail"))
+    assert(a == PipelineMain.Args("d.csv", "s.csv", "r.csv", "out",
+      Seq("A" -> "a.csv", "B" -> "x=b.csv"), "Mail", Some((10L, 297))))
+    assert(PipelineMain.parseArgs(paths) ==
+      PipelineMain.Args("d.csv", "s.csv", "r.csv", "out"))
+  }
+
+  test("parseArgs: malformed command lines fail with the usage message") {
+    Seq(
+      Seq("--repdata", "col") -> "--repdata expects col=csvPath",
+      Seq("--expect-shape", "10") -> "--expect-shape expects ROWSxCOLS",
+      Seq("--expect-shape", "10xten") -> "--expect-shape expects ROWSxCOLS",
+      Seq("--email_col", "X") -> "unknown argument '--email_col'",
+      Seq("--repdata", "A=a.csv", "--email-col") -> "--email-col needs a value",
+      Seq("--email-col", "X", "--email-col", "Y") -> "--email-col given twice",
+      Seq("extra") -> "unknown argument 'extra'"
+    ).foreach { case (flags, why) =>
+      val e = intercept[IllegalArgumentException](PipelineMain.parseArgs(paths ++ flags))
+      assert(e.getMessage.contains(why), e.getMessage)
+      assert(e.getMessage.contains(PipelineMain.usage))
+    }
+    val short = intercept[IllegalArgumentException](PipelineMain.parseArgs(paths.take(3)))
+    assert(short.getMessage.contains(PipelineMain.usage))
+  }
 }

@@ -55,6 +55,24 @@ class CsvJsonIOSpec extends SparkSpec {
       .as[String].collect().toSeq == Seq("X"))
   }
 
+  test("list and sample sinks take dotted column names literally") {
+    val dir = tmp()
+    val c = "Parliamentary Constituency (U.K.)"
+    CsvJsonIO.writeDistinctLists(Seq(c -> Seq("b", "a").toDF(c)), s"$dir/lists")
+      .foreach(_())
+    val list = CsvJsonIO.readCsv(spark, s"$dir/lists/Parliamentary_Constituency__U.K._")
+    assert(list.columns.toSeq == Seq(c))
+    assert(list.as[String].collect().toSeq == Seq("a", "b"))
+    val df = Seq(("3", "z"), ("1", "x"), ("2", "y")).toDF("Ref (U.K.)", "we`ird")
+    CsvJsonIO.writeSample(df, s"$dir/sample", "Ref (U.K.)", n = 2)
+    CsvJsonIO.writeDistinctLists(Seq("w" -> df.select("`we``ird`")), s"$dir/w")
+      .foreach(_())
+    assert(CsvJsonIO.readCsv(spark, s"$dir/sample").as[(String, String)]
+      .collect().toSeq == Seq(("1", "x"), ("2", "y")))
+    assert(CsvJsonIO.readCsv(spark, s"$dir/w/w").as[String].collect().toSeq ==
+      Seq("x", "y", "z"))
+  }
+
   test("distinct lists whose names share a directory fail before any write") {
     val dir = tmp() + "/clash"
     val lists = Seq(
